@@ -17,19 +17,25 @@ anti-pattern at distributed scale. The Spark-idiomatic equivalents:
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import AbstractSet, Optional
 
 from pyspark import SparkContext
 
 
-def job_group_metrics(sc: SparkContext, group: str) -> dict:
+def job_group_metrics(
+    sc: SparkContext, group: str, skip_jobs: AbstractSet[int] = frozenset()
+) -> dict:
     """Aggregate job/stage/task counts for one job group from the
     driver's status tracker (public monitoring API — no listener
-    registration, works identically on a real cluster)."""
+    registration, works identically on a real cluster). ``skip_jobs``
+    leaves out jobs the group already held before the run being
+    measured: the tracker retains a reused group's earlier jobs."""
     st = sc.statusTracker()
     n_jobs = n_stages = n_tasks = n_failed = 0
     seen_stages: set[int] = set()
     for job_id in st.getJobIdsForGroup(group):
+        if job_id in skip_jobs:
+            continue
         info = st.getJobInfo(job_id)
         if info is None:
             continue

@@ -73,8 +73,12 @@ def run_pipeline(
     def run_one(m: Migration) -> MigrationResult:
         target = simulate_migration(m) if simulate else m
         sc = spark.sparkContext
+        group = f"a2b:{m.name}"
+        # the status tracker keeps an earlier run's jobs under the same
+        # group: count only the jobs this run adds
+        earlier_jobs = set(sc.statusTracker().getJobIdsForGroup(group))
         sc.setLocalProperty("spark.scheduler.pool", "a2b")
-        sc.setJobGroup(f"a2b:{m.name}", f"migration {m.name}", interruptOnCancel=False)
+        sc.setJobGroup(group, f"migration {m.name}", interruptOnCancel=False)
         progress("start", m.name, None)
         try:
             # simulate: nothing persists — neither destination rows (the
@@ -94,7 +98,7 @@ def run_pipeline(
         # under the same label)
         from a2b_spark.exec.metrics import job_group_metrics
 
-        r.spark_metrics = job_group_metrics(sc, f"a2b:{m.name}")
+        r.spark_metrics = job_group_metrics(sc, group, skip_jobs=earlier_jobs)
         progress("done", m.name, r)
         return r
 

@@ -621,20 +621,18 @@ def q140_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-skipping contract (Delta/Iceberg) as an oracle-checked query.
     """
     import os
-    import uuid
 
     from a2b_spark.storage.table import VersionedParquetTable
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
-    from a2b_spark.queries.round7 import _sweep_stale_scratch
+    from a2b_spark.queries.round7 import _scratch_path
 
     # uuid-suffixed: concurrent invocations (bench + oracle check) must
     # not rmtree the version dir another run's lazy plan still reads;
     # stale siblings from prior runs are swept instead (>2h old)
-    path = f"/tmp/a2b_q140_{os.path.basename(os.path.normpath(sf_dir))}_{uuid.uuid4().hex[:8]}"
-    _sweep_stale_scratch("/tmp", "a2b_q140_")
+    path = _scratch_path(sf_dir, "q140")
     t = VersionedParquetTable(path, key_cols=["o_orderkey"])
     t.overwrite(o.repartition(8, "o_orderkey"))  # hash layout: no skipping
     vdir = os.path.join(path, t.current_version())
@@ -681,18 +679,14 @@ def q141_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ranges; the oracle recomputes each commit's expected churn
     straight from the source table, so the driver hash certifies both
     the per-pair diffs and the version-range walk/tagging."""
-    import os
-    import uuid
-
-    from a2b_spark.queries.round7 import _sweep_stale_scratch
+    from a2b_spark.queries.round7 import _scratch_path
     from a2b_spark.storage.cdf import table_changes
     from a2b_spark.storage.table import VersionedParquetTable
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
-    path = f"/tmp/a2b_q141_{os.path.basename(os.path.normpath(sf_dir))}_{uuid.uuid4().hex[:8]}"
-    _sweep_stale_scratch("/tmp", "a2b_q141_")
+    path = _scratch_path(sf_dir, "q141")
     t = VersionedParquetTable(path, key_cols=["o_orderkey"], retention=5)
     t.overwrite(o)
     v2 = o.withColumn(

@@ -369,93 +369,96 @@ def collect_orc_footer_stats(
             full = os.path.join(version_dir, rel)
             jpath = jvm.org.apache.hadoop.fs.Path("file://" + full)
             reader = orcfile.createReader(jpath, orcfile.readerOptions(hconf))
-            schema = reader.getSchema()
-            if schema.getCategory().getName() != "struct":
-                return None
-            rows = int(reader.getNumberOfRows())
-            stats = reader.getStatistics()
-            names = list(schema.getFieldNames())
-            children = schema.getChildren()
-            cols: dict[str, dict] = {}
-            for i, name in enumerate(names[:MAX_STATS_COLUMNS]):
-                child = children[i]
-                category = child.getCategory().getName()
-                tag = _ORC_TAGS.get(category)
-                # Spark records its logical type as a schema attribute
-                # when it differs from the physical ORC category
-                # (TIMESTAMP_NTZ rides an int64 of micros). The
-                # distributed harvester sees the LOGICAL type, so this
-                # path must too; the one known mapping is handled, any
-                # other physical/logical divergence falls back whole.
-                catalyst = child.getAttributeValue("spark.sql.catalyst.type")
-                ntz_micros = False
-                if catalyst is not None:
-                    cat_tag = _SPARK_TAGS.get(catalyst)
-                    if catalyst == "timestamp_ntz" and category == "bigint":
-                        tag, ntz_micros = "ts", True
-                    elif cat_tag != tag:
-                        return None
-                if tag is None:
-                    continue
-                st = stats[int(child.getId())]
-                n_values = int(st.getNumberOfValues())
-                nulls = rows - n_values
-                if n_values == 0:
-                    cols[name] = {"t": tag, "min": None, "max": None, "nulls": nulls}
-                    continue
-                if ntz_micros:
-                    epoch = _dt.datetime(1970, 1, 1)
-                    mn = epoch + _dt.timedelta(microseconds=int(st.getMinimum()))
-                    mx = epoch + _dt.timedelta(microseconds=int(st.getMaximum()))
-                elif tag == "i":
-                    mn, mx = int(st.getMinimum()), int(st.getMaximum())
-                elif tag == "f":
-                    mn, mx = float(st.getMinimum()), float(st.getMaximum())
-                    s = st.getSum()
-                    if s is None or math.isnan(float(s)):
-                        mx = None  # NaN present: true max is NaN
-                        if mn == 1.7976931348623157e308:
-                            # ALL values NaN: ORC never updated min and
-                            # left Double.MAX_VALUE — drop it (a column
-                            # genuinely bounded at MAX_VALUE merely
-                            # loses pruning, never correctness)
-                            mn = None
-                elif tag == "s":
-                    mn = st.getMinimum()
-                    if mn is None:  # >1024b: truncated prefix = lower bound
-                        mn = st.getLowerBound()
-                    # None when truncated; ORC's incremented getUpperBound
-                    # is not used (MAX_STRING_LEN would drop it anyway)
-                    mx = st.getMaximum()
-                elif tag == "b":
-                    mn = int(st.getFalseCount()) == 0  # no False -> min True
-                    mx = int(st.getTrueCount()) > 0
-                elif tag == "ts":
-
-                    def _utc_micros(jts):
-                        if jts is None:
+            try:
+                schema = reader.getSchema()
+                if schema.getCategory().getName() != "struct":
+                    return None
+                rows = int(reader.getNumberOfRows())
+                stats = reader.getStatistics()
+                names = list(schema.getFieldNames())
+                children = schema.getChildren()
+                cols: dict[str, dict] = {}
+                for i, name in enumerate(names[:MAX_STATS_COLUMNS]):
+                    child = children[i]
+                    category = child.getCategory().getName()
+                    tag = _ORC_TAGS.get(category)
+                    # Spark records its logical type as a schema attribute
+                    # when it differs from the physical ORC category
+                    # (TIMESTAMP_NTZ rides an int64 of micros). The
+                    # distributed harvester sees the LOGICAL type, so this
+                    # path must too; the one known mapping is handled, any
+                    # other physical/logical divergence falls back whole.
+                    catalyst = child.getAttributeValue("spark.sql.catalyst.type")
+                    ntz_micros = False
+                    if catalyst is not None:
+                        cat_tag = _SPARK_TAGS.get(catalyst)
+                        if catalyst == "timestamp_ntz" and category == "bigint":
+                            tag, ntz_micros = "ts", True
+                        elif cat_tag != tag:
                             return None
-                        micros = (int(jts.getTime()) // 1000) * 1_000_000 + int(
-                            jts.getNanos()
-                        ) // 1000
-                        return _dt.datetime(1970, 1, 1) + _dt.timedelta(
-                            microseconds=micros
-                        )
+                    if tag is None:
+                        continue
+                    st = stats[int(child.getId())]
+                    n_values = int(st.getNumberOfValues())
+                    nulls = rows - n_values
+                    if n_values == 0:
+                        cols[name] = {"t": tag, "min": None, "max": None, "nulls": nulls}
+                        continue
+                    if ntz_micros:
+                        epoch = _dt.datetime(1970, 1, 1)
+                        mn = epoch + _dt.timedelta(microseconds=int(st.getMinimum()))
+                        mx = epoch + _dt.timedelta(microseconds=int(st.getMaximum()))
+                    elif tag == "i":
+                        mn, mx = int(st.getMinimum()), int(st.getMaximum())
+                    elif tag == "f":
+                        mn, mx = float(st.getMinimum()), float(st.getMaximum())
+                        s = st.getSum()
+                        if s is None or math.isnan(float(s)):
+                            mx = None  # NaN present: true max is NaN
+                            if mn == 1.7976931348623157e308:
+                                # ALL values NaN: ORC never updated min and
+                                # left Double.MAX_VALUE — drop it (a column
+                                # genuinely bounded at MAX_VALUE merely
+                                # loses pruning, never correctness)
+                                mn = None
+                    elif tag == "s":
+                        mn = st.getMinimum()
+                        if mn is None:  # >1024b: truncated prefix = lower bound
+                            mn = st.getLowerBound()
+                        # None when truncated; ORC's incremented getUpperBound
+                        # is not used (MAX_STRING_LEN would drop it anyway)
+                        mx = st.getMaximum()
+                    elif tag == "b":
+                        mn = int(st.getFalseCount()) == 0  # no False -> min True
+                        mx = int(st.getTrueCount()) > 0
+                    elif tag == "ts":
 
-                    mn = _utc_micros(st.getMinimumUTC())
-                    mx = _utc_micros(st.getMaximumUTC())
-                else:  # "d"
-                    epoch_day = _dt.date(1970, 1, 1)
-                    mn = epoch_day + _dt.timedelta(days=int(st.getMinimumDayOfEpoch()))
-                    mx = epoch_day + _dt.timedelta(days=int(st.getMaximumDayOfEpoch()))
-                mn, mx = _encode(mn, tag), _encode(mx, tag)
-                if tag == "s":
-                    if mn is not None and len(mn) > MAX_STRING_LEN:
-                        mn = mn[:MAX_STRING_LEN]  # prefix = valid lower bound
-                    if mx is not None and len(mx) > MAX_STRING_LEN:
-                        mx = None  # a truncated prefix is NOT an upper bound
-                cols[name] = {"t": tag, "min": mn, "max": mx, "nulls": nulls}
-            out[rel] = {"rows": rows, "cols": cols}
+                        def _utc_micros(jts):
+                            if jts is None:
+                                return None
+                            micros = (int(jts.getTime()) // 1000) * 1_000_000 + int(
+                                jts.getNanos()
+                            ) // 1000
+                            return _dt.datetime(1970, 1, 1) + _dt.timedelta(
+                                microseconds=micros
+                            )
+
+                        mn = _utc_micros(st.getMinimumUTC())
+                        mx = _utc_micros(st.getMaximumUTC())
+                    else:  # "d"
+                        epoch_day = _dt.date(1970, 1, 1)
+                        mn = epoch_day + _dt.timedelta(days=int(st.getMinimumDayOfEpoch()))
+                        mx = epoch_day + _dt.timedelta(days=int(st.getMaximumDayOfEpoch()))
+                    mn, mx = _encode(mn, tag), _encode(mx, tag)
+                    if tag == "s":
+                        if mn is not None and len(mn) > MAX_STRING_LEN:
+                            mn = mn[:MAX_STRING_LEN]  # prefix = valid lower bound
+                        if mx is not None and len(mx) > MAX_STRING_LEN:
+                            mx = None  # a truncated prefix is NOT an upper bound
+                    cols[name] = {"t": tag, "min": mn, "max": mx, "nulls": nulls}
+                out[rel] = {"rows": rows, "cols": cols}
+            finally:
+                reader.close()  # ReaderImpl holds the file open until closed
         return out
     except Exception:
         return None

@@ -383,9 +383,10 @@ class VersionedParquetTable:
                 )
         except (ImportError, ValueError, TypeError, KeyError):
             # only the expected conversion/availability surprises fall
-            # back to Spark's schema inference; a genuine I/O error
-            # (corrupt vector file) must surface at read time below,
-            # not be silently deferred by a blanket except
+            # back to Spark's schema inference. pyarrow's ArrowInvalid
+            # is a ValueError, so a corrupt vector file lands here too;
+            # it surfaces at the Spark read below, with Spark's error.
+            # An OSError is not caught and raises here.
             pass
         dv = reader.parquet(d)
         schema = self._version_schema(version)
@@ -1310,9 +1311,8 @@ class VersionedParquetTable:
         # A, commit data for set B, and record change rows for set C.
         # Skipped only when exactly one action will consult it (the
         # unpartitioned tombstone-clash full rewrite without CDF). On
-        # the partitioned-merge path the pin job ALSO answers which
-        # partitions the batch touches (observation riding the
-        # checkpoint pass — same fold as append's).
+        # the partitioned-merge path the pin's materializing collect
+        # also answers the touched set (see _pin_with_touched).
         touched_pre: Optional[set] = None
         if self.partition_by and not tombstone_clash:
             batch, touched_pre = self._pin_with_touched(batch)
@@ -1373,16 +1373,16 @@ class VersionedParquetTable:
         # (touched-partition collect, duplicate-key CDC guard, CDF
         # change-file write, the data write itself) — see merge() for
         # the non-deterministic-lineage divergence this prevents. On a
-        # partitioned table the pin job ALSO answers which partitions
-        # the batch touches (observation riding the checkpoint pass).
+        # partitioned table the pin's materializing collect also
+        # answers the touched set (see _pin_with_touched).
         touched_pre: Optional[set] = None
         if self.partition_by and not dedupe_keys:
             batch, touched_pre = self._pin_with_touched(batch)
         elif self.partition_by or self.cdf_enabled(base):
             # with dedupe_keys the touched set must be recomputed on the
             # POST-anti-join batch anyway (a partition whose rows all
-            # dedupe away must hardlink, not rewrite), so the
-            # observation would be wasted — plain pin
+            # dedupe away must hardlink, not rewrite), so the pin's
+            # touched-set collect would be wasted — plain pin
             batch = batch.localCheckpoint(eager=True)
         current = self.read(batch.sparkSession, version=base)
         if dedupe_keys:
@@ -1419,7 +1419,7 @@ class VersionedParquetTable:
                         )
                 elif self.partitions_derived_from_keys:
                     # dedupe_keys is None in this branch, so the pin's
-                    # observation already answered the touched set
+                    # collect already answered the touched set
                     touched = (
                         touched_pre
                         if touched_pre is not None

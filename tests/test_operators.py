@@ -3,6 +3,7 @@
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from a2b_spark.operators import dedup as D
 from a2b_spark.operators import similarity as S
@@ -142,8 +143,24 @@ def test_null_vector_robustness(spark, embs):
 def test_knn_bruteforce_query_bound(embs):
     with pytest.raises(ValueError, match="max_query_rows"):
         S.knn_bruteforce(embs, embs, "embedding", "vec_id", k=3, max_query_rows=10)
-    with pytest.raises(ValueError, match="max_query_rows"):
-        S.knn_pq(embs, embs, "embedding", "vec_id", k=3, max_query_rows=10)
+    for fn in (S.knn_pq, S.knn_ivf_pq):
+        with pytest.raises(ValueError, match="max_query_rows"):
+            fn(embs, embs, "embedding", "vec_id", k=3, max_query_rows=10)
+
+
+def test_knn_empty_query_side_returns_empty_result(embs):
+    """An empty query side answers zero rows in the KNN result schema."""
+    q = embs.filter(F.col("vec_id") < 0)
+    for fn in (S.knn_pq, S.knn_ivf_pq):
+        out = fn(q, embs, "embedding", "vec_id", k=3)
+        id_type = embs.schema["vec_id"].dataType
+        assert [(f.name, f.dataType) for f in out.schema] == [
+            ("query_id", id_type),
+            ("corpus_id", id_type),
+            ("cos", T.DoubleType()),
+            ("rk", T.IntegerType()),
+        ]
+        assert out.count() == 0
 
 
 def test_knn_overflow_falls_back_to_lsh(embs):
@@ -156,7 +173,7 @@ def test_knn_overflow_falls_back_to_lsh(embs):
         (r.query_id, r.corpus_id)
         for r in S.knn_bruteforce(q, embs, "embedding", "vec_id", k=3).collect()
     }
-    for fn in (S.knn_bruteforce, S.knn_pq):
+    for fn in (S.knn_bruteforce, S.knn_pq, S.knn_ivf_pq):
         out = fn(
             q, embs, "embedding", "vec_id", k=3, max_query_rows=2, on_overflow="lsh"
         ).collect()
@@ -166,8 +183,9 @@ def test_knn_overflow_falls_back_to_lsh(embs):
         # param regression to the miss-half-the-neighbors regime fails
         got = {(r.query_id, r.corpus_id) for r in out}
         assert len(exact & got) / len(exact) >= 0.9
-    with pytest.raises(ValueError, match="on_overflow"):
-        S.knn_pq(q, embs, "embedding", "vec_id", on_overflow="bogus")
+    for fn in (S.knn_pq, S.knn_ivf_pq):
+        with pytest.raises(ValueError, match="on_overflow"):
+            fn(q, embs, "embedding", "vec_id", on_overflow="bogus")
 
 
 def test_embedding_lsh_matches_exact(embs):

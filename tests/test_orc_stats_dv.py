@@ -421,6 +421,29 @@ def test_orc_footer_harvest_multifile_and_odd_names(spark, tmp_path):
     assert merged_cols["a.b"]["t"] == "i" and merged_cols["e:f"]["t"] == "s"
 
 
+def test_orc_footer_harvest_closes_its_readers(spark, tmp_path):
+    """Every ORC Reader the footer harvest opens is closed again: an
+    unclosed reader keeps its file open in the JVM until GC, so a
+    harvest over many files must leave no descriptor on the table."""
+    from a2b_spark.storage.stats import collect_orc_footer_stats
+
+    p = str(tmp_path / "fds")
+    spark.range(48).repartition(24).write.format("orc").save(p)
+    rels = sorted(f for f in os.listdir(p) if not f.startswith(("_", ".")))
+    assert len(rels) >= 20
+    assert collect_orc_footer_stats(spark, p, rels) is not None
+    fd_dir = f"/proc/{spark._jvm.java.lang.ProcessHandle.current().pid()}/fd"
+    held = []
+    for fd in os.listdir(fd_dir):
+        try:
+            target = os.readlink(os.path.join(fd_dir, fd))
+        except OSError:  # closed while listing
+            continue
+        if target.startswith(p + os.sep):
+            held.append(target)
+    assert held == []
+
+
 def test_orc_footer_harvest_fallback_conditions(spark, tmp_path):
     """None (-> distributed fallback) on oversize batches and on
     unreadable files; never a partial answer."""

@@ -132,14 +132,23 @@ def test_run_pipeline_collects_spark_metrics(spark, tmp_path, sf_dir):
             transform=lambda df: df.select("__src__", "__dest_id", "c_custkey"),
         )
     )
-    results = run_pipeline(
-        spark, reg, MappingStore(spark, str(tmp_path / "maps")), progress=lambda *a: None
-    )
+    mapper = MappingStore(spark, str(tmp_path / "maps"))
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    results = run_pipeline(spark, reg, mapper, progress=lambda *a: None)
     r = results["metrics_mig"]
     assert r.rows_in == 15 and r.rows_written == 15
     m = r.spark_metrics
     assert m is not None and m["jobs"] >= 1 and m["tasks"] >= 1
     assert m["failed_tasks"] == 0
+    # a second run reuses the job group a2b:metrics_mig; its metrics
+    # must count only its own jobs, none of the first run's
+    bus.waitUntilEmpty()
+    first_jobs = set(tracker.getJobIdsForGroup("a2b:metrics_mig"))
+    r2 = run_pipeline(spark, reg, mapper, progress=lambda *a: None)["metrics_mig"]
+    bus.waitUntilEmpty()
+    second_jobs = set(tracker.getJobIdsForGroup("a2b:metrics_mig")) - first_jobs
+    assert second_jobs and r2.spark_metrics["jobs"] == len(second_jobs)
 
 
 def test_cli_main_end_to_end(spark, tmp_path, sf_dir, monkeypatch):
